@@ -102,7 +102,9 @@ def main(argv: list[str]) -> int:
     crashed = None
     try:
         wl = importlib.import_module(args.workload)
-        e2e, layers, ev = wl.run(engine, args.seed, args.seconds, bool(args.trace),
+        # a traced run measures an untraced and a traced window of half the time each
+        window_s = args.seconds / 2 if args.trace else args.seconds
+        e2e, layers, ev = wl.run(engine, args.seed, window_s, bool(args.trace),
                                  work, T_PROCESS, tally)
         evidence.update(ev, versions=engine.versions, peak_rss_mb=engine.peak_rss_mb())
         metrics = layers if args.trace else e2e
