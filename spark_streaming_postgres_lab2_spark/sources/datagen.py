@@ -158,10 +158,13 @@ class EventGenerator:
 
     def write_csv(self, events: list[dict[str, Any]], out_dir: str, filename: str) -> str:
         """Atomic CSV write (temp + os.replace) so a streaming reader
-        never observes a partial file (reference G:201-219)."""
+        never observes a partial file (reference G:201-219).  The temp
+        file is dot-prefixed: Spark's file source skips such names, so a
+        listing that falls between the write and the rename cannot
+        admit it."""
         os.makedirs(out_dir, exist_ok=True)
         final = os.path.join(out_dir, filename)
-        tmp = final + ".tmp"
+        tmp = os.path.join(out_dir, f".{filename}.tmp")
         with open(tmp, "w", newline="") as fh:
             writer = csv.DictWriter(fh, fieldnames=CSV_COLUMNS, extrasaction="ignore")
             writer.writeheader()

@@ -8,11 +8,14 @@ JDBC appends (S3-S5).  Differences by design:
   available via sources/jdbc.py behind the same interface;
 - exactly-once: the reference leans on the Postgres primary key to
   absorb replayed micro-batches (SURVEY §2.6 note); with parquet there
-  is no PK, so writes go to ``.../batch_id=N`` subdirectories in
+  is no PK, so writes go to ``.../epoch=N`` subdirectories in
   overwrite mode -- a replayed epoch overwrites its own output
   (idempotent), never duplicates it;
-- metrics in ONE aggregation pass (operators/quality.py) instead of
-  ~10 actions per batch;
+- the epoch frame is persisted once and fanned out to its consumers:
+  a non-empty epoch runs at most 4 Spark jobs (the grouped metrics
+  aggregation of operators/quality.py, which also fills the cache, and
+  the three writes) where the reference issues ~10 actions; an empty
+  epoch runs the aggregation alone, its zero row count being the guard;
 - the database retry policy is actually wired around the writes
   (the reference defines C1-C3 but never uses them, SURVEY §2.8).
 """
@@ -28,7 +31,7 @@ from pyspark.sql import functions as F
 
 from ..operators.enrich import DEAD_LETTER_COLUMNS, ENRICHED_EVENT_COLUMNS
 from ..operators.quality import calculate_quality_metrics, metrics_row_df
-from ..utils.monitoring import BatchMetrics, BatchTracker, PipelineMonitor
+from ..utils.monitoring import BatchTracker, PipelineMonitor
 from ..utils.retry import RetryPolicy, database_retry_policy
 
 log = logging.getLogger(__name__)
@@ -39,7 +42,6 @@ class SinkConfig:
     events_path: str
     dead_letter_path: str
     metrics_path: str
-    partition_batch_subdirs: bool = True
 
 
 def write_partitioned_events(df: DataFrame, path: str, mode: str = "overwrite") -> None:
@@ -78,72 +80,36 @@ class BatchRouter:
     def _write(self, df: DataFrame, path: str, batch_id: int) -> None:
         if self.write_fn is not None:
             self.write_fn(df, path, batch_id)
-        elif self.sink.partition_batch_subdirs:
+        else:
             # 'epoch' (not 'batch_id') so the dir key never shadows the
             # metrics table's batch_id data column on read
             df.write.mode("overwrite").parquet(f"{path}/epoch={batch_id}")
-        else:
-            # NOTE: append mode is NOT exactly-once -- a retried or
-            # replayed epoch appends its rows again.  The default
-            # per-epoch overwrite layout is the idempotent path.
-            log.warning(
-                "append-mode sink writes are not idempotent under retry/replay; "
-                "prefer partition_batch_subdirs=True"
-            )
-            df.write.mode("append").parquet(path)
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        # r15 (guide §2.4): checkpoint BEFORE the empty-guard -- the
-        # old order ran the full batch pipeline once for isEmpty()'s
-        # head(1) and then AGAIN to materialize the checkpoint; on the
-        # checkpointed frame the emptiness probe reads one cached
-        # block.  An empty epoch pays one cheap empty materialization
-        # instead of a scan, so the guard's purpose (skip the three
-        # writes + metrics on empty batches) is unchanged.
-        batch_df = batch_df.localCheckpoint(eager=True)  # one lineage for N consumers
+        # one computation of the epoch for all its consumers; the metrics
+        # aggregation runs first and fills the cache
+        batch_df.persist()
         try:
-            self._route(batch_df, batch_id)
+            with BatchTracker(batch_id) as tracker:
+                m = calculate_quality_metrics(batch_df, batch_id)
+                if m.total_rows == 0:
+                    return
+                valid = batch_df.filter(F.col("is_valid")).select(
+                    *[c for c in ENRICHED_EVENT_COLUMNS if c in batch_df.columns]
+                )
+                dead = batch_df.filter(~F.col("is_valid")).select(
+                    *[c for c in DEAD_LETTER_COLUMNS if c in batch_df.columns]
+                )
+                self.retry.execute(self._write, valid, self.sink.events_path, batch_id)
+                if m.invalid_rows:
+                    self.retry.execute(self._write, dead, self.sink.dead_letter_path, batch_id)
+                metrics_df = metrics_row_df(batch_df.sparkSession, m)
+                self.retry.execute(self._write, metrics_df, self.sink.metrics_path, batch_id)
         finally:
-            # r16 (ADVICE r15): checkpointed RDD blocks are only freed on
-            # GC of the DataFrame; a long-running stream with many (incl.
-            # empty) epochs would otherwise accumulate one cached block
-            # set per batch.  Free them explicitly on BOTH exits -- the
-            # epoch's consumers have all run by now.
-            try:
-                batch_df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-            except Exception:  # py4j internals: freeing is best-effort
-                log.debug("checkpoint unpersist failed", exc_info=True)
+            batch_df.unpersist()
 
-    def _route(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        with BatchTracker(batch_id) as tracker:
-            q = calculate_quality_metrics(batch_df, batch_id)
-
-            valid = batch_df.filter(F.col("is_valid")).select(
-                *[c for c in ENRICHED_EVENT_COLUMNS if c in batch_df.columns]
-            )
-            dead = batch_df.filter(~F.col("is_valid")).select(
-                *[c for c in DEAD_LETTER_COLUMNS if c in batch_df.columns]
-            )
-            self.retry.execute(self._write, valid, self.sink.events_path, batch_id)
-            if q.invalid_rows:
-                self.retry.execute(self._write, dead, self.sink.dead_letter_path, batch_id)
-            metrics_df = metrics_row_df(batch_df.sparkSession, q)
-            self.retry.execute(self._write, metrics_df, self.sink.metrics_path, batch_id)
-
-        alerts = self.monitor.record(
-            BatchMetrics(
-                batch_id=batch_id,
-                total_rows=q.total_rows,
-                valid_rows=q.valid_rows,
-                invalid_rows=q.invalid_rows,
-                processing_seconds=tracker.elapsed,
-                late_arrival_count=q.late_arrival_count,
-                error_distribution=q.error_distribution,
-            )
-        )
-        for alert in alerts:
+        m.processing_seconds = tracker.elapsed
+        for alert in self.monitor.record(m):
             log.log(
                 logging.ERROR if alert.level == "ERROR" else logging.WARNING,
                 "batch %s alert [%s]: %s", batch_id, alert.kind, alert.message,

@@ -19,12 +19,17 @@ from typing import Any
 
 @dataclass
 class BatchMetrics:
+    """The one record per epoch: ``operators.quality`` fills the counts
+    and distributions, the sink router adds ``processing_seconds``."""
+
     batch_id: int
     total_rows: int
     valid_rows: int
     invalid_rows: int
-    processing_seconds: float
+    processing_seconds: float = 0.0
     late_arrival_count: int = 0
+    null_counts: dict[str, int] = field(default_factory=dict)
+    event_type_distribution: dict[str, int] = field(default_factory=dict)
     error_distribution: dict[str, int] = field(default_factory=dict)
 
     @property
@@ -50,6 +55,9 @@ class BatchMetrics:
             "throughput_rps": self.throughput,
             "processing_seconds": self.processing_seconds,
             "late_arrival_count": self.late_arrival_count,
+            "null_counts": dict(self.null_counts),
+            "event_type_distribution": dict(self.event_type_distribution),
+            "error_distribution": dict(self.error_distribution),
         }
 
 

@@ -83,11 +83,23 @@ def test_unique_event_ids():
     assert len(set(ids)) == len(ids)
 
 
-def test_atomic_csv_write(tmp_path):
+def test_atomic_csv_write(tmp_path, monkeypatch):
     g = gen()
     events = g.generate_batch(25)
+    renamed = []
+    real_replace = os.replace
+
+    def replace(src, dst):
+        renamed.append(src)
+        real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", replace)
     path = g.write_csv(events, str(tmp_path), "batch_0001.csv")
-    assert os.path.exists(path) and not os.path.exists(path + ".tmp")
+    [tmp] = renamed
+    # a dot-prefixed temp name is skipped by Spark's file source listing
+    assert os.path.dirname(tmp) == str(tmp_path)
+    assert os.path.basename(tmp).startswith(".")
+    assert os.path.exists(path) and not os.path.exists(tmp)
     with open(path) as fh:
         rows = list(csv.DictReader(fh))
     assert len(rows) == 25

@@ -122,6 +122,39 @@ def test_analytics_views_over_sink(pipeline_output):
     assert spark.sql("SELECT * FROM v_category_performance").count() >= 1
 
 
+def test_epoch_job_shape(spark, tmp_path):
+    """A one-file run is one data epoch (the metrics aggregation, which
+    fills the persisted batch frame, plus three writes) and one no-data
+    epoch (the aggregation alone): at most 5 Spark jobs.  The metrics
+    row never goes through a Python RDD, and no cached block outlives
+    the run."""
+    from spark_streaming_postgres_lab2_spark.operators.quality import metrics_row_df
+    from spark_streaming_postgres_lab2_spark.plans.checks import physical_plan
+    from spark_streaming_postgres_lab2_spark.utils.monitoring import BatchMetrics
+
+    gen = EventGenerator(seed=5, anomaly_rate=0.10, now=NOW)
+    gen.write_csv(gen.generate_batch(200), str(tmp_path / "in"), "a.csv")
+    cfg = StreamingConfig(
+        input_path=str(tmp_path / "in"),
+        checkpoint_path=str(tmp_path / "ckpt"),
+        output_path=str(tmp_path / "out"),
+    )
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    persisted_before = set(persisted().keySet())
+    pipe = build_pipeline(spark, cfg)
+    q = pipe.start(trigger_once=True)
+    q.awaitTermination(120)
+
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert 0 < len(jobs) <= 5
+    assert set(persisted().keySet()) <= persisted_before
+    assert "ExistingRDD" not in physical_plan(metrics_row_df(spark, BatchMetrics(0, 1, 1, 0)))
+    [record] = pipe.router.monitor.window
+    assert record.total_rows == 200 and sum(record.event_type_distribution.values()) == 200
+    metrics = spark.read.parquet(f"{tmp_path}/out/data_quality_metrics")
+    assert [r["total_rows"] for r in metrics.collect()] == [200]
+
+
 def test_streaming_dedup_drops_replayed_event_ids(spark, tmp_path):
     """The live watermark+dropDuplicates path (dead code in the
     reference, M:324-329): the same event_id in two files survives
